@@ -95,7 +95,7 @@ HEADLINE = [
     "parts_triangle_estimate_p10",
     "corpus_bbpe_encode_stats",
     # r10: the production tokenizer (GPT-2 pre-tokenizer + rank-80 cut
-    # of the exhaustion ladder — the heaviest new fold chain) and the
+    # of the exhaustion ladder — the heaviest new merge table) and the
     # two serve-from-state sketches (cheap by design; tracked so the
     # bounded-state claim stays a measured fact)
     "corpus_bbpe_encode_stats_v2",

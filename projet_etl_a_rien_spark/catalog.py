@@ -77,16 +77,3 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     for n, df in load_tables(spark, sf_dir, *names).items():
         df.createOrReplaceTempView(n)
 
-
-def widen_input(df: DataFrame) -> DataFrame:
-    """Round-robin the input to the session's core count IFF it is
-    narrower — a single-file fixture otherwise runs heavy per-row map
-    work (shingle hashing, JSON parse, grid bucketing) on one core
-    before the first shuffle (r5 parallelism audit). No-op when the
-    input is already at least cores-wide, so at production widths no
-    extra shuffle is ever added. Results are partitioning-independent;
-    only the task layout changes."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
-        return df
-    return df.repartition(cores)

@@ -1,39 +1,35 @@
-"""Distributed byte-pair-encoding merge learning (Sennrich et al. 2016).
+"""Byte-pair-encoding tokenizer: merge learning and frozen-table
+encoding (Sennrich et al. 2016; byte-level twin after Radford et al.
+2019).
 
-The tokenizer-training half of an LLM data pipeline: learn the top-N
-BPE merges over a corpus. Classic word-level BPE — the corpus collapses
-to a (word, count) table first, so after the single corpus-scale
-shuffle every iteration runs on vocabulary-sized data (Heaps' law:
-tiny next to 100 TB of text, but still distributed — no driver-side
-corpus materialization).
+LEARNING. The corpus collapses to a (key, cnt, syms) table of distinct
+words or pre-tokens first, so after the single corpus-scale shuffle
+every iteration runs on vocabulary-sized data (Heaps' law). Per rank:
 
-Per iteration:
-
-1. adjacent-pair counts: one HOF ``transform`` over each word's symbol
-   array (JVM-side, no Python) exploded and summed with the word's
-   corpus count — a vocab-scale groupBy;
+1. adjacent-pair counts summed with each key's corpus count;
 2. argmax pair with a deterministic tie-break (count desc, then
    (left, right) tuple order — pairs travel as struct<l,r>, never a
    separator-joined string, so a symbol containing ANY character is
-   safe) — ``TakeOrderedAndProject`` of ONE row to the driver, the
-   same index-sized driver materialization as ``kmeans_fit``'s
-   centroids;
-3. apply the merge with a greedy left-to-right ``F.aggregate`` fold
-   over each symbol array (the accumulator carries the flushed prefix
-   and one pending symbol; "a a a" under merge (a,a) correctly yields
-   ["aa", "a"]). ``localCheckpoint`` truncates the growing expression
-   lineage each iteration — ``num_merges`` nested folds would
-   otherwise stack into one giant Catalyst tree (the same
-   lineage-truncation discipline as the iterative graph operators).
+   safe);
+3. one greedy left-to-right non-overlapping rewrite of every symbol
+   array ("a a a" under merge (a,a) yields ["aa", "a"]).
 
-The merge loop is inherently sequential (merge i+1's counts depend on
-merge i's rewrite) — ``num_merges`` is a driver-latency knob, the
-data-side cost per iteration is O(vocab · avg word length).
+Below ``DRIVER_LEARN_MAX_ROWS`` vocab rows the loop runs on the driver
+over the collected vocabulary (:func:`_learn_merges_driver`); above it
+each rank is a vocab-scale groupBy + a one-row argmax + the JVM rewrite
+fold :func:`_apply_merge`, lineage-truncated by ``localCheckpoint``.
+The loop is inherently sequential (merge i+1's counts depend on merge
+i's rewrite).
 
-No SQL oracle: the iterative argmax/rewrite loop is the brief's
-"genuinely non-SQL-expressible" case; correctness is pinned by a
-pytest property test against a pure-Python reference implementation
-(tests/test_round6.py).
+ENCODING. A frozen merge list is applied in rank order, one greedy
+pass per merge (:func:`_merge_pass`, the same rewrite the driver
+learner runs), by ONE Arrow-batched ``mapInPandas`` stage over the
+distinct-key table (:func:`_encode_table`). Plan depth is O(1) in the
+table size, and the corpus-scale work is one explode and one join.
+
+Learning has no SQL oracle (the iterative argmax/rewrite loop is
+pinned against a pure-Python reference in tests/test_round6.py);
+encoding under a frozen table carries hash-exact DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -134,10 +130,10 @@ def word_symbol_table(
     its initial symbol sequence: characters plus a terminal ``</w>``
     marker (so merges cannot cross word boundaries and a word-final
     subword is distinct from a word-internal one). The ONE corpus-scale
-    shuffle of BPE training."""
+    shuffle of BPE training; callers widen a narrow ``df`` first
+    (``widen_narrow_input``)."""
     return (
-        widen_narrow_input(df)
-        .select(F.explode(tokens(text_col)).alias("word"))
+        df.select(F.explode(tokens(text_col)).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -165,6 +161,25 @@ def word_symbol_table(
 DRIVER_LEARN_MAX_ROWS = 1_000_000
 
 
+def _merge_pass(syms: list[str], left: str, right: str) -> list[str]:
+    """Greedy left-to-right non-overlapping merge of (left, right) →
+    left+right over one symbol list — the Python twin of
+    :func:`_apply_merge`, shared by the driver learner and the
+    encoder."""
+    if left not in syms:
+        return syms
+    out: list[str] = []
+    i, n = 0, len(syms)
+    while i < n:
+        if i + 1 < n and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
 def _learn_merges_driver(
     rows: list[tuple[int, list[str]]],
     num_merges: int,
@@ -176,8 +191,9 @@ def _learn_merges_driver(
     argmax tie-break is (count desc, (l, r) asc) — Python's code-point
     string order equals Spark's UTF8 binary order because UTF-8 is
     order-preserving — and the rewrite is the same greedy left-to-right
-    non-overlapping scan as ``_apply_merge``. Equality with the fold
-    engine is pinned in tests/test_round15.py."""
+    non-overlapping scan as ``_apply_merge`` (:func:`_merge_pass`).
+    Equality with the distributed loop is pinned in
+    tests/test_round15.py."""
     merges: list[tuple[int, str, str, int]] = []
     seqs = rows
     for rank in range(1, num_merges + 1):
@@ -194,24 +210,9 @@ def _learn_merges_driver(
         if n < min_pair_count:
             break
         merges.append((rank, left, right, int(n)))
-        merged = left + right
-        nxt: list[tuple[int, list[str]]] = []
-        for cnt, syms in seqs:
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if (
-                    i + 1 < len(syms)
-                    and syms[i] == left
-                    and syms[i + 1] == right
-                ):
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            nxt.append((cnt, out))
-        seqs = nxt
+        seqs = [
+            (cnt, _merge_pass(syms, left, right)) for cnt, syms in seqs
+        ]
     return merges
 
 
@@ -291,8 +292,11 @@ def learn_bpe_merges(
     right, pair_count)] in learned order. Stops early when no pair
     reaches ``min_pair_count``. ``engine`` as in :func:`_learn_merges`."""
     return _learn_merges(
-        word_symbol_table(df, text_col), "word", num_merges,
-        min_pair_count, engine,
+        word_symbol_table(widen_narrow_input(df), text_col),
+        "word",
+        num_merges,
+        min_pair_count,
+        engine,
     )
 
 
@@ -306,57 +310,72 @@ def bpe_merge_table(
     )
 
 
+def _encode_table(
+    table: DataFrame,
+    key_col: str,
+    merges: list[tuple[int, str, str, int]],
+) -> DataFrame:
+    """(key, syms) → (key, syms): the frozen merge list applied to each
+    row's initial symbols in rank order, one greedy pass per merge
+    (:func:`_merge_pass`) — NOT the iterative lowest-rank-first loop
+    some BPE encoders use, so a pair that only forms after its merge's
+    rank has passed stays split, exactly as in the SQL oracles' replace
+    chains. ONE Arrow-batched ``mapInPandas`` stage over the
+    distinct-key table: plan depth is O(1) in the table size, the table
+    partitions across executors, and per-key cost is
+    O(merges · len), independent of corpus size.
+
+    Callers LEFT-join the corpus occurrences to the result. Every
+    occurrence key is in the table, so that equals the inner join, and
+    it makes this vocab-sized side the only broadcast candidate: under
+    an inner join the planner's row-size estimates can pick the corpus
+    side to broadcast instead."""
+    pairs = [(left, right) for _rank, left, right, _n in merges]
+
+    def encode_batches(batches):
+        for pdf in batches:
+            out = []
+            for syms in pdf["syms"]:
+                syms = list(syms)
+                for left, right in pairs:
+                    syms = _merge_pass(syms, left, right)
+                out.append(syms)
+            pdf["syms"] = out
+            yield pdf
+
+    return table.select(key_col, "syms").mapInPandas(
+        encode_batches, schema=f"{key_col} string, syms array<string>"
+    )
+
+
 def apply_bpe_merges(
     df: DataFrame,
     merges: list[tuple[int, str, str, int]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Encode the corpus with a learned merge list: per-doc token stats
     under the BPE segmentation (the tokenizer-application half —
     ``learn_bpe_merges`` is the training half).
 
     BPE encoding applies the merges IN LEARNED RANK ORDER (not longest-
-    match — that's WordPiece), so the rewrite is a chain of the same
-    greedy folds used during training, run over the DISTINCT-WORD table
-    (vocabulary-sized — the corpus-scale work is one word explode and
-    one word join). ``localCheckpoint`` every few merges keeps the
-    chained fold expressions from stacking into one giant Catalyst tree
-    (the bigger the merge list, the more the plan would otherwise
-    deepen; the data per step stays vocab-sized).
+    match — that's WordPiece) through :func:`_encode_table` over the
+    distinct-word table of :func:`word_symbol_table` (vocabulary-sized
+    — the corpus-scale work is one word explode and one word join).
 
     Returns (doc_id, n_words, n_bpe_tokens, bpe_per_word) — the
     compression diagnostic a tokenizer-fit report needs (tokens/word
     under the learned vocab; 1.0 means every word became one token).
     """
     wdf = widen_narrow_input(df)
-    syms = (
-        wdf.select(F.explode(tokens(text_col)).alias("word"))
-        .where(F.col("word") != "")
-        .distinct()
-        .select(
-            "word",
-            F.concat(F.split(F.col("word"), ""), F.array(F.lit(END))).alias(
-                "syms"
-            ),
-        )
-    )
-    for i, (_rank, left, right, _n) in enumerate(merges):
-        syms = syms.select(
-            "word", _apply_merge(F.col("syms"), left, right).alias("syms")
-        )
-        if (i + 1) % checkpoint_every == 0:
-            nxt = syms.localCheckpoint(eager=True)
-            syms = nxt
-    lengths = syms.select(
-        "word", F.size("syms").cast("long").alias("n_sym")
-    )
+    lengths = _encode_table(
+        word_symbol_table(wdf, text_col), "word", merges
+    ).select("word", F.size("syms").cast("long").alias("n_sym"))
     occ = wdf.select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("word")
     ).where(F.col("word") != "")
     return (
-        occ.join(lengths, "word")
+        occ.join(lengths, "word", "left")
         .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").alias("n_words"),
@@ -489,10 +508,10 @@ def pretoken_symbol_table(
     and the leading space travels inside the token (GPT-2's Ġ). The ONE
     corpus-scale shuffle of BBPE training. ``pretoken_re`` selects the
     pre-token class structure (v1 whitespace split or the GPT-2-faithful
-    GPT2_PRETOKEN_RE)."""
+    GPT2_PRETOKEN_RE). Callers widen a narrow ``df`` first, as for
+    :func:`word_symbol_table`."""
     return (
-        widen_narrow_input(df)
-        .select(
+        df.select(
             F.explode(
                 F.regexp_extract_all(
                     F.col(text_col), F.lit(pretoken_re), F.lit(0)
@@ -518,7 +537,7 @@ def learn_bbpe_merges(
     Same loop, argmax tie-break, and early stop as the word-level
     trainer — only the seed table differs."""
     return _learn_merges(
-        pretoken_symbol_table(df, text_col, pretoken_re),
+        pretoken_symbol_table(widen_narrow_input(df), text_col, pretoken_re),
         "pt",
         num_merges,
         min_pair_count,
@@ -540,109 +559,18 @@ def bbpe_merge_table(
     )
 
 
-# Above this many merges the chained-fold encode is dominated by plan
-# construction (~0.08 s/merge of Catalyst/codegen per chained select,
-# measured r11), so production-sized tables take the Arrow path.
-FOLD_ENGINE_MAX_MERGES = 64
-
-
-def _bbpe_syms_table(
-    distinct_pts: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    checkpoint_every: int,
-    engine: str = "auto",
-) -> DataFrame:
-    """(pt, syms) — each DISTINCT pre-token rewritten to its token
-    symbol sequence under the frozen merge list (rank-ordered greedy
-    application, one pass per merge — the semantics all three
-    implementations share: the JVM fold chain, this Arrow encoder, and
-    the SQL oracle's replace chain).
-
-    Two engines, one contract:
-
-    - ``fold``: the declarative chain — one JVM ``aggregate`` fold per
-      merge with periodic ``localCheckpoint`` lineage truncation. Plan
-      depth grows with the table; ideal for bounded tables (the
-      learner's pins) where everything stays whole-stage-codegen.
-    - ``arrow``: ONE ``mapInPandas`` stage that applies the whole
-      frozen table per pre-token in Arrow-batched Python. Plan depth
-      is O(1) regardless of table size — at a production table size
-      (rank ≥ 500) the fold chain pays ~0.08 s/merge of pure
-      plan-construction cost while the data per step is vocab-sized,
-      so the Arrow encoder is strictly cheaper AND stays fully
-      distributed (the table partitions across executors; per-type
-      cost is O(merges_fired · len), independent of corpus size —
-      exactly how production tokenizers run native encode loops per
-      worker while Spark handles the corpus-scale explode/join).
-
-    ``auto`` picks fold for ≤ FOLD_ENGINE_MAX_MERGES merges, arrow
-    above (equality of the two engines is property-pinned)."""
-    if engine == "auto":
-        engine = (
-            "fold" if len(merges) <= FOLD_ENGINE_MAX_MERGES else "arrow"
-        )
-    if engine == "fold":
-        syms = distinct_pts.select(
-            "pt", byte_symbols(F.col("pt")).alias("syms")
-        )
-        for i, (_rank, left, right, _n) in enumerate(merges):
-            syms = syms.select(
-                "pt",
-                _apply_merge(F.col("syms"), left, right).alias("syms"),
-            )
-            if (i + 1) % checkpoint_every == 0:
-                syms = syms.localCheckpoint(eager=True)
-        return syms
-    if engine != "arrow":
-        raise ValueError(f"unknown encode engine: {engine!r}")
-    pairs = [(left, right) for _rank, left, right, _n in merges]
-
-    def encode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for pt in pdf["pt"]:
-                syms = [f"{b:02X}" for b in pt.encode("utf-8")]
-                for left, right in pairs:
-                    if left not in syms:
-                        continue
-                    nxt, i, n = [], 0, len(syms)
-                    while i < n:
-                        if (
-                            i + 1 < n
-                            and syms[i] == left
-                            and syms[i + 1] == right
-                        ):
-                            nxt.append(left + right)
-                            i += 2
-                        else:
-                            nxt.append(syms[i])
-                            i += 1
-                    syms = nxt
-                out.append((pt, syms))
-            yield pd.DataFrame(out, columns=["pt", "syms"])
-
-    return distinct_pts.mapInPandas(
-        encode_batches, schema="pt string, syms array<string>"
-    )
-
-
 def apply_bbpe_merges(
     df: DataFrame,
     merges: list[tuple[int, str, str, int]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_every: int = 3,
     pretoken_re: str = BYTE_PRETOKEN_RE,
-    engine: str = "auto",
 ) -> DataFrame:
     """Encode the corpus with a frozen byte-level merge list: per-doc
     token stats under the BBPE segmentation. Rank-ordered greedy merge
-    application over the DISTINCT-pre-token table (vocabulary-sized;
-    the corpus-scale work is one pre-token explode and one join); see
-    :func:`_bbpe_syms_table` for the fold/arrow engine split at
-    production table sizes.
+    application (:func:`_encode_table`) over the distinct-pre-token
+    table of :func:`pretoken_symbol_table` (vocabulary-sized; the
+    corpus-scale work is one pre-token explode and one join).
 
     Returns (doc_id, n_pretokens, n_bytes, n_bbpe_tokens,
     bytes_per_token) — n_bytes/n_bbpe_tokens is the compression ratio a
@@ -651,16 +579,9 @@ def apply_bbpe_merges(
     what a production trainer's packing/budget/chunk layout would see.
     """
     wdf = widen_narrow_input(df)
-    pts = F.regexp_extract_all(
-        F.col(text_col), F.lit(pretoken_re), F.lit(0)
-    )
-    syms = _bbpe_syms_table(
-        wdf.select(F.explode(pts).alias("pt")).distinct(),
-        merges,
-        checkpoint_every,
-        engine,
-    )
-    lengths = syms.select(
+    lengths = _encode_table(
+        pretoken_symbol_table(wdf, text_col, pretoken_re), "pt", merges
+    ).select(
         "pt",
         F.size("syms").cast("long").alias("n_sym"),
         # each hex symbol is 2 chars per byte; total hex length/2 = bytes
@@ -670,10 +591,13 @@ def apply_bbpe_merges(
         ).alias("n_b"),
     )
     occ = wdf.select(
-        F.col(id_col).alias("id"), F.explode(pts).alias("pt")
+        F.col(id_col).alias("id"),
+        F.explode(
+            F.regexp_extract_all(F.col(text_col), F.lit(pretoken_re), F.lit(0))
+        ).alias("pt"),
     )
     return (
-        occ.join(lengths, "pt")
+        occ.join(lengths, "pt", "left")
         .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").alias("n_pretokens"),
@@ -689,9 +613,7 @@ def bbpe_roundtrip(
     merges: list[tuple[int, str, str, int]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_every: int = 3,
     pretoken_re: str = BYTE_PRETOKEN_RE,
-    engine: str = "auto",
 ) -> DataFrame:
     """DECODE path of the byte-level tokenizer: encode every document
     with the frozen merge table, then reconstruct the text from the
@@ -704,30 +626,26 @@ def bbpe_roundtrip(
     position and string-concatenates — no tokenizer state needed at
     decode time, exactly like production BPE decoders.
 
-    Same scale shape as encode: the merge folds run on the DISTINCT
-    pre-token table (vocab-sized), the corpus pays one posexplode + one
-    join + one groupBy(doc)."""
+    Same scale shape as encode: :func:`_encode_table` runs on the
+    distinct pre-token table (vocab-sized), the corpus pays one
+    posexplode + one join + one groupBy(doc)."""
     wdf = widen_narrow_input(df)
-    pts = F.regexp_extract_all(
-        F.col(text_col), F.lit(pretoken_re), F.lit(0)
-    )
-    syms = _bbpe_syms_table(
-        wdf.select(F.explode(pts).alias("pt")).distinct(),
-        merges,
-        checkpoint_every,
-        engine,
-    )
-    dec = syms.select(
+    dec = _encode_table(
+        pretoken_symbol_table(wdf, text_col, pretoken_re), "pt", merges
+    ).select(
         "pt",
         F.decode(F.unhex(F.concat_ws("", F.col("syms"))), "UTF-8").alias(
             "dec"
         ),
     )
     occ = wdf.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(pts).alias("pos", "pt")
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(
+            F.regexp_extract_all(F.col(text_col), F.lit(pretoken_re), F.lit(0))
+        ).alias("pos", "pt"),
     )
     return (
-        occ.join(dec, "pt")
+        occ.join(dec, "pt", "left")
         .groupBy("doc_id")
         .agg(
             F.array_join(

@@ -596,50 +596,29 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verification sampling order. The evidence ledger is derived at runtime
 # from the CORRECTNESS_r*.json artifacts the driver commits (see
 # _correctness_evidence below) — never-checked names sample first, then
-# oldest evidence. _DRIVER_PRIORITY remains as a manual override slot for
-# names that must jump the queue in a given round (empty by default).
-# r15 budget (second optimization round): the r14 verdict's ask #2
-# leads — the 8 r14-changed plans that missed the r14 sample get the
-# first slots; any plan r15 itself rewrites is appended behind them
-# (same r11 rule: changed plans get fresh driver evidence the round
-# they change). The remaining ~30+ slots drain the ledger head (the
-# r8-evidence leftovers that didn't fit the r14 window). Zero new
-# registrations this round.
-# r14 history: 12 priority slots (triangle family ×6, kNN/kmeans ×4,
-# FastSS ×2 — the r14-rewritten plans) + the r7×1 leftover + 37
-# ledger-ordered r8 names = 50, all green in CORRECTNESS_r14.
+# oldest evidence. _DRIVER_PRIORITY is the manual override slot: names
+# whose computation changed since their last green CORRECTNESS row, so they
+# sample first.
 _DRIVER_PRIORITY: list[str] = [
-    # r15 slot 1 (r14 verdict ask #2): the 8 r14-changed plans that got
-    # NO fresh driver-oracle row in the r14 sample — 4 web (the
-    # url_features/IDN checkpoint restructure) + the PQ/dedup-kNN family
-    # (_dist_pairs tensor argmin + the salted pair stage). These must
-    # verify before anything else this round.
-    "web_url_canonicalize",
-    "web_domain_blocklist",
-    "web_url_dedup_keepers",
-    "web_domain_stats",
-    "embedding_pq_codes",
-    "embedding_pq_adc_topk",
-    "embedding_ivfadc_topk",
-    "embedding_knn_join_dedup_top3",
-    # r15 changed plans: compute_splits literal 16 → "auto" (session-
-    # parallelism-derived salt, 32 on this box) — a wider task layout
-    # with an identical pair set; results are salt-invariant by
-    # construction (tests pin equality across widths) but the executed
-    # plan changed, so the r11 rule applies. (The sibling sites that
-    # were already 32 resolve to the same plan on the 32-core driver.)
-    "embedding_near_dup_pairs",
-    "embedding_cross_set_contamination",
-    "customer_name_edit_pairs",
-    "customer_entity_resolution",
-    # r15 changed computation: the BPE merge-learning loop runs
-    # driver-side below DRIVER_LEARN_MAX_ROWS vocab rows (the returned
-    # merge table was always a driver-built LocalRelation; the loop
-    # that computes it changed engines, so fresh evidence per r11 rule)
-    "bpe_learn_merges",
-    "bpe_learn_merges_bytes",
-    "bpe_learn_merges_bytes_gpt2",
-    "streaming_bbpe_learn_mv",
+    # one Arrow encoder for every BPE encode entry point
+    "corpus_bpe_encode_stats",
+    "corpus_bbpe_encode_stats",
+    "corpus_bbpe_encode_stats_v2",
+    "corpus_bbpe_encode_stats_ladder",
+    "corpus_bbpe_fertility_by_lang",
+    "corpus_bbpe_fertility_by_lang_v2",
+    "corpus_stream_chunk_index_bbpe",
+    "corpus_stream_chunk_index_bbpe_v2",
+    "corpus_bbpe_roundtrip",
+    # right-to-erasure rewrites run from a thread pool
+    "postings_erasure_index",
+    # co-purchase graph: hub guard + part-table degree certificate
+    "parts_triangle_counts",
+    "parts_triangle_counts_auto",
+    "parts_triangle_estimate",
+    "parts_triangle_estimate_p10",
+    "parts_kcore",
+    "parts_copurchase_bfs_3hop",
 ]
 
 

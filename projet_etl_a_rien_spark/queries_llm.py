@@ -784,13 +784,13 @@ def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.png import png_encode, register_builtin_png_codecs
 
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
     register_builtin_png_codecs()
     width, stride = 32, 32 * 3
-    # widen_input: the Arrow codec stages are per-row Python CPU work,
+    # widen_narrow_input: the Arrow codec stages are per-row Python CPU work,
     # and a single-file fixture would run them one-wide (r5 audit)
-    payloads = widen_input(
+    payloads = widen_narrow_input(
         multimodal.with_binary_payload(_docs(spark, sf_dir)).where(
             F.length("payload") > 0
         )

@@ -103,18 +103,14 @@ def q_corpus_bbpe_encode_stats_v2(
         _docs(spark, sf_dir),
         bpe.FIXED_BYTE_MERGES_V2,
         pretoken_re=bpe.GPT2_PRETOKEN_RE,
-        checkpoint_every=8,
     )
 
 
 # ---------------------------------------------------------------------------
 # Encoding under the FULL exhaustion ladder (586 merges) — the deepest
 # merge table the training data defines, exercising the encode path at
-# a REAL-VOCAB plan width (the r10 verdict's stress-test ask). At this
-# depth the chained-fold engine would pay ~45 s of pure plan
-# construction, so the auto engine takes the Arrow-batched encoder:
-# ONE mapInPandas over the vocab-sized distinct-pre-token table, plan
-# depth O(1), fold/arrow equality property-pinned.
+# a REAL-VOCAB table width: ONE mapInPandas over the vocab-sized
+# distinct-pre-token table, plan depth O(1) in the table size.
 # ---------------------------------------------------------------------------
 
 
@@ -131,9 +127,8 @@ def q_corpus_bbpe_encode_stats_v2(
     "instead. Registered to pin the encode path at PRODUCTION table "
     "width: 586 rank-ordered greedy merges applied by the "
     "Arrow-batched distinct-pre-token encoder (one mapInPandas stage, "
-    "plan depth O(1) — the fold-chain twin is property-pinned equal "
-    "and remains the engine for bounded tables), against a 586-step "
-    "replace-chain oracle (materialized every 16).",
+    "plan depth O(1)), against a 586-step replace-chain oracle "
+    "(materialized every 16).",
 )
 def q_corpus_bbpe_encode_stats_ladder(
     spark: SparkSession, sf_dir: str
@@ -142,7 +137,6 @@ def q_corpus_bbpe_encode_stats_ladder(
         _docs(spark, sf_dir),
         bpe.BBPE_MERGES_V2,
         pretoken_re=bpe.GPT2_PRETOKEN_RE,
-        checkpoint_every=8,
     )
 
 
@@ -189,7 +183,6 @@ def q_corpus_bbpe_fertility_by_lang_v2(
         _docs(spark, sf_dir),
         bpe.FIXED_BYTE_MERGES_V2,
         pretoken_re=bpe.GPT2_PRETOKEN_RE,
-        checkpoint_every=8,
     )
     d = _docs(spark, sf_dir).select("doc_id", "lang")
     return (
@@ -268,7 +261,6 @@ def q_corpus_stream_chunk_index_bbpe_v2(
         docs,
         bpe.FIXED_BYTE_MERGES_V2,
         pretoken_re=bpe.GPT2_PRETOKEN_RE,
-        checkpoint_every=8,
     ).select("doc_id", "n_bbpe_tokens")
     return _t.stream_chunk_index(
         counts,
@@ -1035,7 +1027,7 @@ def q_corpus_gpt2_pretoken_class_census(
 # multibyte café/中文) so UTF-8 multi-byte symbols, category-split
 # pre-tokens, and merged tokens all roundtrip — the oracle is the
 # decorated text itself, so ANY loss anywhere in pretokenize → byte
-# symbols → merge folds → unhex-decode → positional reassembly breaks
+# symbols → merge passes → unhex-decode → positional reassembly breaks
 # the hash.
 # ---------------------------------------------------------------------------
 
@@ -1052,7 +1044,7 @@ def q_corpus_gpt2_pretoken_class_census(
     "and that positional reassembly restores document order. The "
     "oracle is the identity on the decorated text — the strongest "
     "possible roundtrip gate. Scale shape unchanged from encode: merge "
-    "folds on the vocab-sized distinct pre-token table; the corpus "
+    "passes on the vocab-sized distinct pre-token table; the corpus "
     "pays one posexplode + one join + one groupBy(doc).",
 )
 def q_corpus_bbpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1072,7 +1064,6 @@ def q_corpus_bbpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec,
         bpe.FIXED_BYTE_MERGES_V2,
         pretoken_re=bpe.GPT2_PRETOKEN_RE,
-        checkpoint_every=8,
     )
 
 
@@ -1246,7 +1237,7 @@ def q_streaming_bloom_gate_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from .catalog import widen_input as _widen
+    from .operators.text import widen_narrow_input as _widen
     from .fixtures import documents_with_dups
     from .operators import dedup as _dedup
     from .queries_round7 import BLOOM_M_BITS, BLOOM_N
@@ -1562,14 +1553,14 @@ def q_multimodal_phash_near_dup_pairs(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
     from .fixtures import documents_with_dups
     from .operators import multimodal
     from .operators.png import png_decode, png_encode
 
     w, hgt, bpr = PHASH_GRID_W, PHASH_GRID_H, PHASH_BITS_PER_ROW
     stride, src_w = _PHASH_STRIDE, _PHASH_SRC_W
-    payloads = widen_input(
+    payloads = widen_narrow_input(
         multimodal.with_binary_payload(
             documents_with_dups(spark, sf_dir)
         ).where(F.length("payload") > 0)

@@ -517,9 +517,9 @@ GROUP BY t.id
     "the dedup inverted index it can share.",
 )
 def q_doc_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
-    d = widen_input(load_table(spark, sf_dir, "documents"))
+    d = widen_narrow_input(load_table(spark, sf_dir, "documents"))
     base = d.select(
         F.col("doc_id").alias("id"),
         dedup.hashed_shingles("text", 3).alias("xs"),
@@ -829,10 +829,10 @@ def q_airports_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.airports import clean_coords, parse_json_messages
     from .operators.joins import grid_proximity_join
 
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
     clean = clean_coords(
-        parse_json_messages(widen_input(airports_messages(spark, sf_dir)))
+        parse_json_messages(widen_narrow_input(airports_messages(spark, sf_dir)))
     )
     w = Window.partitionBy("id").orderBy("latitude", "longitude")
     pts = (
@@ -912,10 +912,10 @@ FROM spans""",
     "hash-keyed aggregate, one id-keyed window; no suffix array.",
 )
 def q_doc_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
     return dedup.exact_substr_spans(
-        widen_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
+        widen_narrow_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
     )
 
 
@@ -945,10 +945,10 @@ GROUP BY t.id""",
     "equality join on (id, pos) — never a range join.",
 )
 def q_corpus_exact_substr_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
     return dedup.exact_substr_rewrite(
-        widen_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
+        widen_narrow_input(documents_with_dups(spark, sf_dir)), k=EXSUB_K
     )
 
 
@@ -1527,9 +1527,9 @@ GROUP BY id
     "when the benchmark side is small enough.",
 )
 def q_ngram_overlap_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
-    corpus = widen_input(documents_with_dups(spark, sf_dir))
+    corpus = widen_narrow_input(documents_with_dups(spark, sf_dir))
     return dedup.ngram_contamination(
         corpus.where(F.col("doc_id") < 1_000_000),
         corpus.where(F.col("doc_id") >= 1_000_000),

@@ -374,10 +374,10 @@ def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import multimodal
     from .operators.wav import register_builtin_wav_codec, wav_encode
 
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
     register_builtin_wav_codec()
-    payloads = widen_input(
+    payloads = widen_narrow_input(
         multimodal.with_binary_payload(_docs(spark, sf_dir)).where(
             F.length("payload") >= 2
         )
@@ -886,11 +886,11 @@ def q_multimodal_png_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     from .operators import multimodal
     from .operators.png import png_decode, png_encode, register_builtin_png_codecs
 
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
 
     register_builtin_png_codecs()
     width, stride = 32, 96
-    payloads = widen_input(
+    payloads = widen_narrow_input(
         multimodal.with_binary_payload(_docs(spark, sf_dir)).where(
             F.length("payload") > 0
         )

@@ -298,7 +298,7 @@ def _bpe_encode_oracle(merges: list[tuple[int, str, str, int]]) -> str:
     doc="Tokenizer-application half of the BPE loop: per-doc word/BPE-"
     "token counts under the FROZEN 10-merge table (bpe.FIXED_MERGES — "
     "learned once, shipped, applied everywhere: the production "
-    "deployment shape). Rank-ordered greedy fold chain over the "
+    "deployment shape). Rank-ordered greedy merge passes over the "
     "distinct-word table, vocab-sized throughout; freezing the table "
     "makes encoding non-iterative, so this entry carries a full "
     "hash-exact DuckDB oracle (anchored replace-chain rewrite).",
@@ -1193,7 +1193,7 @@ FROM agg a JOIN dom d ON a.doc_id = d.doc_id
 def q_image_dct_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from .catalog import widen_input
+    from .operators.text import widen_narrow_input
     from .operators import multimodal
     from .operators.png import (
         DCT_N,
@@ -1203,7 +1203,7 @@ def q_image_dct_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     width, stride = DCT_N, DCT_N * 3
-    payloads = widen_input(
+    payloads = widen_narrow_input(
         multimodal.with_binary_payload(_docs(spark, sf_dir))
     )
 

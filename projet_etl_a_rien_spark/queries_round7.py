@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import load_table, widen_input
+from .catalog import load_table
 from .operators import retrieval
+from .operators.text import widen_narrow_input
 from .queries import register
 
 
@@ -22,7 +23,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file fixture otherwise runs this module's heavy per-row
     # regexp/parse work on one task (r5 parallelism-audit discipline);
     # no-op at production scan widths.
-    return widen_input(load_table(spark, sf_dir, "documents"))
+    return widen_narrow_input(load_table(spark, sf_dir, "documents"))
 
 
 BB_BUCKETS = 4096
@@ -736,7 +737,7 @@ def q_events_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .catalog import load_table as _lt
 
-    ev = widen_input(
+    ev = widen_narrow_input(
         _lt(spark, sf_dir, "events").where(
             F.col("user_id") % GAP_USER_MOD == 0
         )
@@ -800,7 +801,7 @@ def q_orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .catalog import load_table as _lt
 
-    ev = widen_input(
+    ev = widen_narrow_input(
         _lt(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -989,7 +990,7 @@ FROM base GROUP BY 1
 def q_csv_permissive_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .catalog import load_table as _lt
 
-    ev = widen_input(
+    ev = widen_narrow_input(
         _lt(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -1120,7 +1121,7 @@ def q_events_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .catalog import load_table as _lt
 
-    ev = widen_input(
+    ev = widen_narrow_input(
         _lt(spark, sf_dir, "events").where(
             F.col("user_id") % GAP_USER_MOD == 0
         )
@@ -1277,7 +1278,7 @@ def q_bloom_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .fixtures import documents_with_dups
     from .operators import dedup as _dedup
 
-    corpus = widen_input(documents_with_dups(spark, sf_dir))
+    corpus = widen_narrow_input(documents_with_dups(spark, sf_dir))
     return _dedup.bloom_contamination(
         corpus.where(F.col("doc_id") < 1_000_000),
         corpus.where(F.col("doc_id") >= 1_000_000),
@@ -1334,7 +1335,7 @@ FROM s GROUP BY user_id, session_id
 def q_events_session_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sessions import session_event_sequences
 
-    ev = widen_input(load_table(spark, sf_dir, "events"))
+    ev = widen_narrow_input(load_table(spark, sf_dir, "events"))
     return session_event_sequences(
         ev, gap_seconds=SEQ_GAP_S, pattern=SEQ_PATTERN
     )
@@ -1380,7 +1381,7 @@ def q_multimodal_arrow_zero_copy_stats(
 ) -> DataFrame:
     from .operators import multimodal as _mm
 
-    payloads = widen_input(
+    payloads = widen_narrow_input(
         _mm.with_binary_payload(_docs(spark, sf_dir)).where(
             F.length("payload") > 0
         )

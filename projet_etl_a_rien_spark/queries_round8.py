@@ -54,11 +54,19 @@ def _copurchase_degree_bound(
     """O(metadata) hub certificate for the co-purchase graph consumers
     (graph._full_adjacency's r15 hub guard): a part's degree is
     < |distinct parts|, bounded by the part table's parquet-footer row
-    count — no Spark job. None (footers unavailable) makes the operator
-    fall back to its measured degree pass."""
+    count — no Spark job. None (part table missing or unreadable,
+    footers unavailable) makes the operator fall back to its measured
+    degree pass."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
     from .operators.sketches import _stats_row_count
 
-    return _stats_row_count(load_table(spark, sf_dir, "part"))
+    try:
+        part = load_table(spark, sf_dir, "part")
+    except (AnalysisException, Py4JJavaError):  # missing / unreadable
+        return None
+    return _stats_row_count(part)
 
 
 def _copurchase_edge_pairs_canonical(
@@ -785,11 +793,10 @@ FROM seg GROUP BY doc_id, chunk_idx
     "shuffle (operators/text.py:cdc_chunks).",
 )
 def q_doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import widen_input
-    from .operators.text import cdc_chunks
+    from .operators.text import cdc_chunks, widen_narrow_input
 
     return cdc_chunks(
-        widen_input(load_table(spark, sf_dir, "documents")),
+        widen_narrow_input(load_table(spark, sf_dir, "documents")),
         k=CDC_K,
         boundary_mod=CDC_MOD,
     )

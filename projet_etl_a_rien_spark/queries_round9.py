@@ -177,7 +177,7 @@ def _bbpe_encode_oracle(
     "pre-token/byte/BBPE-token counts plus the bytes-per-token "
     "compression ratio under the FROZEN 10-merge table "
     "(bpe.FIXED_BYTE_MERGES — learned once at sf0.01, shipped, applied "
-    "everywhere). Rank-ordered greedy fold chain over the distinct "
+    "everywhere). Rank-ordered greedy merge passes over the distinct "
     "pre-token table, vocab-sized throughout; these counts — not the "
     "word-level approximation — are what a production trainer's "
     "packing/budget/chunk layout sees.",
@@ -373,7 +373,7 @@ FROM o
     "whitespace approximation; a 1% count drift misplaces every chunk "
     "boundary after it. Same no-global-sort bucket decomposition "
     "(totals -> broadcast cumulative -> bucket-partitioned windows); "
-    "the BBPE counts add one vocab-sized fold chain + a corpus join. "
+    "the BBPE counts add one vocab-sized encode stage + a corpus join. "
     "Oracle composes the encode CTE chain with the naive global-order "
     "prefix-sum spec.",
 )

@@ -8,9 +8,10 @@ function with scale-aware defaults:
 - AQE on (runtime coalescing, skew-join splitting) — the 100 TB design point
   assumes stats are wrong at plan time.
 - Arrow on — any unavoidable Python stage moves via Arrow batches.
-- shuffle partitions sized to the local core count for tests; on a real
-  cluster this is overridden to ~2-3x total cores (or left to AQE's
-  coalescing with a high initial partition number).
+- the runtime SQL confs every query relies on live in ONE table,
+  ``RUNTIME_CONFS``, applied to the built session and re-applied per
+  query (``apply_runtime_confs``) because a caller may bring its own
+  session.
 """
 
 from __future__ import annotations
@@ -44,14 +45,13 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(k, v)
         except Exception:
-            pass  # conf may be static on some builds; builder path sets it
+            pass  # a caller-owned session may refuse a conf change
     return spark
 
 
 def get_spark(
     app_name: str = "projet-etl-a-rien-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str = "8g",
     ui: bool = False,
 ) -> SparkSession:
@@ -64,15 +64,11 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 4)
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.driver.memory", driver_memory)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -80,8 +76,6 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "true" if ui else "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -39,7 +39,6 @@ EAGER = {name for name in REGISTRY if name.startswith("streaming_")} | {
     "mv_time_travel_read",  # builds + compacts a sink, returns checkpoint
     "parquet_schema_evolution_read",  # writes two batches, reads merged
     "bpe_learn_merges",  # iterative merge loop; result is a local merge table
-    "corpus_bpe_encode_stats",  # fold chain localCheckpoints every 3 merges
     "mv_snapshot_changelog",  # builds + compacts a sink, diffs two reads
 }
 

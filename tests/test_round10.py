@@ -569,14 +569,9 @@ def test_v2_cut_bytes_per_token_in_band(spark):
 
 
 def test_encode_chain_plan_depth_500(spark):
-    """The chained-FOLD encode engine supports a 500-merge chain at
-    real-vocab plan width (the first 500 ranks of the REAL r11 ladder
-    — no synthetic filler needed any more), chained with a
-    deeper-than-default checkpoint cadence: it still plans, runs, and
-    matches the pure-Python encode exactly. The fold chain stays the
-    declarative engine for bounded tables; production-depth encodes
-    take the Arrow path (equality pinned in tests/test_round11.py) —
-    this test keeps the fold engine's depth ceiling a proven fact."""
+    """The encoder applies a 500-merge chain (the first 500 ranks of
+    the REAL exhaustion ladder) and matches the pure-Python rank-ordered
+    encode exactly."""
     from projet_etl_a_rien_spark.operators import bpe as bpe_
 
     merges = bpe_.BBPE_MERGES_V2[:500]
@@ -593,8 +588,6 @@ def test_encode_chain_plan_depth_500(spark):
             df,
             merges,
             pretoken_re=bpe_.GPT2_PRETOKEN_RE,
-            checkpoint_every=8,
-            engine="fold",
         ).collect()
     }
     for doc_id, text in texts:

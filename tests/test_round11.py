@@ -334,15 +334,12 @@ def test_kmv_gated_build_matches_python_reference_randomized(spark):
 
 
 # ---------------------------------------------------------------------------
-# BBPE encode engines (r10 verdict ask #3): the Arrow-batched
-# distinct-pre-token encoder must equal the chained-fold engine
-# merge-for-merge — one contract, two physical plans (fold = plan
-# depth per merge for bounded tables; arrow = one mapInPandas stage
-# for production-width tables like the 586-rank r11 ladder).
+# BBPE encoder: the Arrow-batched distinct-pre-token encoder at full
+# ladder width, its one-pass-per-merge contract, and its edge inputs.
 # ---------------------------------------------------------------------------
 
 
-def test_bbpe_arrow_engine_equals_fold_engine(spark):
+def test_bbpe_full_ladder_roundtrip_identity(spark):
     from projet_etl_a_rien_spark.operators import bpe as _bpe
 
     texts = [
@@ -351,60 +348,47 @@ def test_bbpe_arrow_engine_equals_fold_engine(spark):
         (3, "shuffling broadcast merges, I'm sure it's fine"),
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
-    merges = _bpe.BBPE_MERGES_V2[:48]  # bounded: fold stays cheap
-    kw = dict(pretoken_re=_bpe.GPT2_PRETOKEN_RE, checkpoint_every=8)
-    fold = {
-        r.doc_id: (r.n_pretokens, r.n_bytes, r.n_bbpe_tokens)
-        for r in _bpe.apply_bbpe_merges(
-            df, merges, engine="fold", **kw
-        ).collect()
-    }
-    arrow = {
-        r.doc_id: (r.n_pretokens, r.n_bytes, r.n_bbpe_tokens)
-        for r in _bpe.apply_bbpe_merges(
-            df, merges, engine="arrow", **kw
-        ).collect()
-    }
-    assert fold == arrow
-    # roundtrip identity through the arrow engine at FULL ladder width
     dec = {
         r.doc_id: r.decoded
         for r in _bpe.bbpe_roundtrip(
-            df, _bpe.BBPE_MERGES_V2, engine="arrow", **kw
+            df, _bpe.BBPE_MERGES_V2, pretoken_re=_bpe.GPT2_PRETOKEN_RE
         ).collect()
     }
     assert dec == {i: t for i, t in texts}
 
 
 def test_bbpe_one_pass_per_merge_semantics_pinned_across_engines(spark):
-    """The engine's merge-application contract is ONE pass per merge in
-    rank order (what the fold chain, the Arrow encoder, and the SQL
-    oracle all implement) — NOT the iterative lowest-rank-first loop
-    some BPE encoders use. The two diverge exactly when a later merge
-    CREATES an earlier merge's pair: rank 1 = ('61','6263') is absent
-    until rank 2 = ('62','63') forms '6263', and by then rank 1 has
-    already passed, so 'abc' must encode to TWO tokens ['61','6263'],
-    never one. Pin fold == arrow == 2 on that corner."""
+    """The merge-application contract is ONE pass per merge in rank
+    order (what the Arrow encoder and the SQL oracle both implement) —
+    NOT the iterative lowest-rank-first loop some BPE encoders use. The
+    two diverge exactly when a later merge CREATES an earlier merge's
+    pair: rank 1 = ('61','6263') is absent until rank 2 = ('62','63')
+    forms '6263', and by then rank 1 has already passed, so 'abc' must
+    encode to TWO tokens ['61','6263'], never one. Pin Spark == DuckDB
+    == 2 on that corner."""
+    import duckdb
+
     from projet_etl_a_rien_spark.operators import bpe as _bpe
+    from projet_etl_a_rien_spark.queries_round9 import _bbpe_encode_oracle
 
     merges = [(1, "61", "6263", 9), (2, "62", "63", 9)]
     df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    for engine in ("fold", "arrow"):
-        row = _bpe.apply_bbpe_merges(
-            df,
-            merges,
-            pretoken_re=_bpe.GPT2_PRETOKEN_RE,
-            engine=engine,
-        ).collect()[0]
-        assert (row.n_pretokens, row.n_bytes, row.n_bbpe_tokens) == (
-            1,
-            3,
-            2,
-        ), engine
+    row = _bpe.apply_bbpe_merges(
+        df, merges, pretoken_re=_bpe.GPT2_PRETOKEN_RE
+    ).collect()[0]
+    assert (row.n_pretokens, row.n_bytes, row.n_bbpe_tokens) == (1, 3, 2)
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    o = con.sql(
+        _bbpe_encode_oracle(merges, pretoken_re=_bpe.GPT2_PRETOKEN_RE)
+    ).df()
+    assert (
+        int(o.n_pretokens[0]), int(o.n_bytes[0]), int(o.n_bbpe_tokens[0])
+    ) == (1, 3, 2)
 
 
 def test_bbpe_arrow_engine_edge_inputs(spark):
-    """Arrow encoder totality: empty text (zero pre-tokens), a
+    """Encoder totality: empty text (zero pre-tokens), a
     whitespace-only doc, and a long single pre-token all encode without
     error and preserve byte counts."""
     from projet_etl_a_rien_spark.operators import bpe as _bpe
@@ -419,20 +403,11 @@ def test_bbpe_arrow_engine_edge_inputs(spark):
             df,
             _bpe.FIXED_BYTE_MERGES_V2,
             pretoken_re=_bpe.GPT2_PRETOKEN_RE,
-            engine="arrow",
         ).collect()
     }
     assert 1 not in got  # empty text yields no pre-tokens at all
     assert got[2] == (1, 3)
     assert got[3] == (1, 500)
-
-
-def test_bbpe_auto_engine_dispatch():
-    from projet_etl_a_rien_spark.operators import bpe as _bpe
-
-    assert len(_bpe.FIXED_BYTE_MERGES) <= _bpe.FOLD_ENGINE_MAX_MERGES
-    assert len(_bpe.FIXED_BYTE_MERGES_V2) > _bpe.FOLD_ENGINE_MAX_MERGES
-    assert _bpe.EXHAUSTION_RANK >= 500
 
 
 def test_ewma_milli_floors_for_signed_values(spark):

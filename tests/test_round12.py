@@ -418,6 +418,62 @@ def test_triangle_auto_empty_input_policy_parity(spark, tmp_path):
     assert o[4] == 0
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "parts_triangle_counts",
+        "parts_triangle_estimate",
+        "parts_triangle_estimate_p10",
+        "parts_kcore",
+        "parts_copurchase_bfs_3hop",
+    ],
+)
+def test_copurchase_degree_bound_empty_input_oracle_parity(
+    spark, tmp_path, name
+):
+    """The co-purchase entries that take the part-table degree
+    certificate run on a lineitem-only empty sf dir: the missing part
+    table yields no certificate (the measured-degree path), never an
+    error, and each result equals its DuckDB oracle."""
+    import duckdb
+
+    from projet_etl_a_rien_spark.queries import REGISTRY, _load_extensions
+    from tools.driver_mimic import compare
+
+    _load_extensions()
+    sf = tmp_path / "sf_empty"
+    sf.mkdir()
+    spark.createDataFrame(
+        [], "l_orderkey long, l_partkey long"
+    ).write.parquet(str(sf / "lineitem.parquet"))
+    got = REGISTRY[name].fn(spark, str(sf)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{sf}/lineitem.parquet/*.parquet')"
+    )
+    want = con.execute(REGISTRY[name].oracle).df()
+    rows, schema, hashes, _, _ = compare(got, want)
+    assert (rows, schema, hashes) == (True, True, True)
+
+
+def test_copurchase_degree_bound_none_without_readable_part(
+    spark, sf_dir, tmp_path
+):
+    """The part-table footer count when the table is readable; None
+    (no certificate) when it is missing or not parquet."""
+    from projet_etl_a_rien_spark.queries_round8 import (
+        _copurchase_degree_bound,
+    )
+
+    n_part = spark.read.parquet(f"{sf_dir}/part.parquet").count()
+    assert _copurchase_degree_bound(spark, sf_dir) == n_part
+    assert _copurchase_degree_bound(spark, str(tmp_path)) is None
+    (tmp_path / "part.parquet").mkdir()
+    (tmp_path / "part.parquet" / "x.parquet").write_bytes(b"not parquet")
+    assert _copurchase_degree_bound(spark, str(tmp_path)) is None
+
+
 def test_resolve_auto_footer_path_on_real_fixture(spark, sf_dir):
     """Verdict ask #3 end-to-end on the actual driver fixture: the
     catalog loader's normalization is projection-only, so an events

@@ -106,10 +106,24 @@ def test_matching_detail_still_shadows_wrapper(tmp_path):
 def test_r1_bar_loads_from_baseline_local():
     bench = _load_bench()
     bar = bench._load_r1_bar()
-    # the committed re-baseline has 13 overlap queries with r1_sec
-    assert len(bar) == 13
+    # the committed bar: 13 r09 queries with r1_sec merged over 12
+    # r14 graph/ANN/triangle lines with bar_sec
+    assert len(bar) == 25
     assert bar["regional_revenue"] == pytest.approx(1.1728)
+    assert bar["parts_kcore"] == pytest.approx(2.8912)  # r14-only row
     assert all(v > 0 for v in bar.values())
+
+
+def test_r1_bar_r09_wins_on_overlap(tmp_path):
+    for fname, key, rows in (
+        ("BASELINE_LOCAL_r09.json", "r1_sec", {"a": 1.0, "b": 2.0}),
+        ("BASELINE_LOCAL_r14.json", "bar_sec", {"b": 9.0, "c": 3.0}),
+    ):
+        (tmp_path / fname).write_text(
+            json.dumps({"queries": {n: {key: t} for n, t in rows.items()}})
+        )
+    bench = _load_bench(str(tmp_path))
+    assert bench._load_r1_bar() == {"a": 1.0, "b": 2.0, "c": 3.0}
 
 
 def test_r1_bar_absent_artifact_is_empty(tmp_path):

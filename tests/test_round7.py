@@ -178,7 +178,7 @@ def test_bpe_handles_tokens_containing_control_chars(spark):
 
 def test_bpe_fixed_merges_encode_matches_python(spark, sf_dir):
     """corpus_bpe_encode_stats now encodes with the FROZEN shipped merge
-    table (bpe.FIXED_MERGES) — the Spark fold chain must equal a pure-
+    table (bpe.FIXED_MERGES) — the Spark encoder must equal a pure-
     Python rank-ordered greedy application of the same table."""
     from projet_etl_a_rien_spark.catalog import load_table
 
@@ -214,14 +214,15 @@ def test_bpe_fixed_merges_encode_matches_python(spark, sf_dir):
 
 def test_bpe_encode_oracle_replace_chain_semantics(spark):
     """The DuckDB oracle's anchored replace-chain rewrite is the greedy
-    fold: verified on the adversarial back-to-back cases directly in
-    DuckDB against the Spark fold."""
+    merge pass: verified on the adversarial back-to-back cases, plus
+    empty and all-whitespace documents (no words, so no output row),
+    directly in DuckDB against the Spark encoder."""
     import duckdb
 
     from projet_etl_a_rien_spark.queries_round6 import _bpe_encode_oracle
 
     merges = [(1, "a", "a", 9), (2, "aa", "a", 5), (3, "aa", "aa", 3)]
-    texts = ["aaaa aaa aa a", "aaaaa b ab ba", "aaaaaaaa"]
+    texts = ["aaaa aaa aa a", "aaaaa b ab ba", "aaaaaaaa", "", "   "]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
@@ -236,6 +237,7 @@ def test_bpe_encode_oracle_replace_chain_semantics(spark):
         for r in con.sql(_bpe_encode_oracle(merges)).fetchall()
     }
     assert got == want
+    assert set(got) == {0, 1, 2}
 
 
 # ------------------------------------------------- raw-web normalization

@@ -134,7 +134,7 @@ SPOT = [
     # is 1/5 of the p=1/2 twin's, so both wall and shuffle bytes should
     # sit far below it (the knob the 100 TB user dials)
     "parts_triangle_estimate_p10",
-    # r9: byte-level BPE encode — distinct-pretoken fold chain (vocab-
+    # r9: byte-level BPE encode — distinct-pretoken encode stage (vocab-
     # sized rewrites) + one corpus explode/join; linear with the scan
     "corpus_bbpe_encode_stats",
     # r9 late: count-min grid — the groupBy key space is d x w, so
@@ -188,7 +188,7 @@ SPOT = [
     # grid builds (scan-linear) + a per-key grid-cell comparison
     # (flat). Ladder encode: same explode + join as the cut entry —
     # the 7x-deeper merge table must NOT move the growth ratio (the
-    # Arrow engine's per-type cost is corpus-independent).
+    # encoder's per-type cost is corpus-independent).
     "events_sliding_kmv_windows",
     "source_length_drift_ks_by_lang",
     "corpus_bbpe_encode_stats_ladder",

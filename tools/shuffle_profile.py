@@ -29,7 +29,7 @@ from projet_etl_a_rien_spark.session import get_spark
 # Claimed-zero-shuffle projections, then the shuffle-bearing shapes whose
 # volume is the scale story. doc_pii_redact / doc_html_to_text /
 # web_url_canonicalize are also pure projections at the OPERATOR level,
-# but their registry queries ride the fixture-parallelism widen_input
+# but their registry queries ride the fixture-parallelism widen_narrow_input
 # repartition (a no-op at production scan widths), so they report the
 # widen exchange's ~1 MB here — profiled to keep that distinction
 # measured, not asserted.
@@ -80,7 +80,7 @@ PROFILE = [
     # r11: the sliding KMV window (hour-sketch fan + min-k folds +
     # adjacent intersections — exchanges stay O(hours x k)) and the
     # keyed KS dashboard (per-key grid cells only); the full-ladder
-    # encode through the Arrow engine (same corpus-scale explode +
+    # encode through the Arrow encoder (same corpus-scale explode +
     # join as the cut — the 586-merge table adds NO shuffle bytes)
     "events_sliding_kmv_windows",
     "source_length_drift_ks_by_lang",
